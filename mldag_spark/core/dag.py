@@ -29,6 +29,14 @@ Spark-first departures from the reference:
   Catalyst logical plans and no job runs until a sink/estimator
   materializes; each node call is tagged with a Spark job description
   for UI attribution.
+- **``fit_transform`` is one pass** — the reference runs ``fit`` and
+  then a second full ``transform`` pass (``mldagbase.py:689-691``).
+  Here each node is fitted and then transformed once, leaves included;
+  every output is the same, because a node's ``transform`` already
+  follows its own ``fit`` and a ``TransformNode`` alias waits on its
+  parent. Observable difference: a non-leaf node's ``transform`` runs
+  once, not twice, and mixins see one ``_start_run``/``_end_run``
+  pair, not two.
 """
 
 from __future__ import annotations
@@ -737,8 +745,9 @@ class MLDag(Graph):
         return self._execute(args, kwargs, compute_fit=False, transform_leaf_nodes=True)
 
     def fit_transform(self, *args, **kwargs) -> MLDagRun:
-        self.fit(*args, **kwargs)
-        return self.transform(*args, **kwargs)
+        """One pass: per node in topo order run ``fit`` then
+        ``transform``, leaves included."""
+        return self._execute(args, kwargs, compute_fit=True, transform_leaf_nodes=True)
 
     # ------------------------------------------------------------------
     # sugar & introspection

@@ -374,20 +374,7 @@ def dag_ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dag = m.MLDag()
 
-    # r16 (guide §1.2): fit_transform evaluates the DAG twice — the
-    # fit pass ends in the eager LBFGS fit on the train subset, the
-    # transform pass in the caller's action on the rollup leaf — so
-    # the tokenize-×3 featurization ran twice per query run. The
-    # source node takes the run's sf_dir directly, so the memoized
-    # lazily-checkpointed frame (no text column: ids, three doubles,
-    # label, features vector) is keyed on it; the transform pass
-    # reuses the rows the fit action materialized. Fresh dag — hence
-    # fresh memo — per query invocation: nothing persists across runs.
-    feat_memo: dict = {}
-
     def featurize(sf_dir):
-        if sf_dir in feat_memo:
-            return feat_memo[sf_dir]
         d = load(spark, sf_dir, "documents")
         toks = tokenize(F.col("text"))
         n_tok = F.size(toks).cast("double")
@@ -405,11 +392,14 @@ def dag_ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             (F.col("f_distinct_ratio") >= 0.55).cast("double"),
         )
-        feat_memo[sf_dir] = VectorAssembler(
+        # reuse point: the eager LBFGS fit on the train subset
+        # materializes this narrow frame (ids, three doubles, label,
+        # features vector — no text), and the caller's action on the
+        # rollup leaf scores from those rows instead of re-tokenizing
+        return VectorAssembler(
             inputCols=["f_tokens", "f_avg_tok_len", "f_distinct_ratio"],
             outputCol="features",
         ).transform(feats).localCheckpoint(eager=False)
-        return feat_memo[sf_dir]
 
     def train_subset(df):
         # content-free deterministic ~50% split (same md5-bucket trick
@@ -691,12 +681,12 @@ def dag_pipeline_fit_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ``TransformNode`` applies the train-fitted model to the
         HELD-OUT test split → per-lang stats of the scaled features
 
-    ``dag.fit_transform`` runs the fit pass (estimator fit exactly
-    once, on train — pinned by the engine's leaf-elision tests) and
-    the transform pass; the oracle replays the scaler arithmetic
-    relationally ((x - mean)/STDDEV_SAMP over the train split,
-    applied to the test split — the ``dag_ml_standard_scaler``
-    precedent, 3 dp rounding for summation noise). Scale shape: the
+    ``dag.fit_transform`` is one pass (estimator fit exactly once, on
+    train, before its alias transforms test); the oracle replays the
+    scaler arithmetic relationally ((x - mean)/STDDEV_SAMP over the
+    train split, applied to the test split — the
+    ``dag_ml_standard_scaler`` precedent, 3 dp rounding for summation
+    noise). Scale shape: the
     front half is the clean_pack plan (one content-hash corpus
     shuffle); the scaler fit is one Spark ML summarizer pass over the
     train split; apply is map-only; the stats agg is lang-keyed."""
@@ -721,23 +711,7 @@ def build_fit_apply_dag(spark: SparkSession):
 
     dag = m.MLDag()
 
-    # r16 (guide §1.2): dag.fit_transform evaluates the DAG twice —
-    # the fit pass ends in the EAGER scaler.fit on the train split,
-    # the transform pass in the caller's action on the stats leaf —
-    # and each pass rebuilds every frame, so the clean → dedup-window
-    # → gate front half executed TWICE per query run. Memoizing the
-    # lazily-checkpointed featurize frame (narrow survivors: doc_id,
-    # lang, 2-double vector, bucket) makes the transform pass reuse
-    # the rows the fit action already materialized. The memo is keyed
-    # on the run's sf_dir (recorded by the source node, which the
-    # scheduler always runs first) and lives in this closure: a fresh
-    # dag — hence a fresh memo — is built per query invocation, so
-    # nothing persists across invocations.
-    run_src: dict = {}
-    feat_memo: dict = {}
-
     def load_docs(sf_dir):
-        run_src["dir"] = sf_dir
         return load(spark, sf_dir, "documents")
 
     # shared front-half contract (queries/text.py) — see
@@ -749,22 +723,22 @@ def build_fit_apply_dag(spark: SparkSession):
         return pipeline_dedup_stage(cleaned)
 
     def featurize(deduped):
-        key = run_src["dir"]
-        if key not in feat_memo:
-            n, dr, keep = pipeline_gate_exprs()
-            feat_memo[key] = (
-                deduped.filter(keep)
-                .select(
-                    "doc_id",
-                    "lang",
-                    array_to_vector(
-                        F.array(n.cast("double"), dr)
-                    ).alias("fv"),
-                    _split_bucket().alias("bucket"),
-                )
-                .localCheckpoint(eager=False)
+        n, dr, keep = pipeline_gate_exprs()
+        # reuse point: the eager scaler.fit on the train split
+        # materializes these narrow survivors (doc_id, lang, 2-double
+        # vector, bucket), and the caller's action on the stats leaf
+        # reads those rows instead of re-running the clean →
+        # dedup-window → gate front half
+        return (
+            deduped.filter(keep)
+            .select(
+                "doc_id",
+                "lang",
+                array_to_vector(F.array(n.cast("double"), dr)).alias("fv"),
+                _split_bucket().alias("bucket"),
             )
-        return feat_memo[key]
+            .localCheckpoint(eager=False)
+        )
 
     def train_split(feats):
         return feats.filter(F.col("bucket") < 80)

@@ -38,7 +38,9 @@ def normalize(df):
         if isinstance(v, float):
             if math.isnan(v):
                 return None
-            return ("f", round(v, 6))
+            # `or 0.0` maps -0.0 (also what a tiny negative rounds to)
+            # to 0.0: the two are equal but their str() keys sort apart
+            return ("f", round(v, 6) or 0.0)
         import numpy as np
 
         if isinstance(v, (int, np.integer)) and not isinstance(v, bool):

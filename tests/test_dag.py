@@ -16,6 +16,7 @@ from mldag_spark import (
     MLDag,
     MLDagError,
     MLDagMixin,
+    MLDagNode,
     NodeBase,
     NodeExecutionError,
     SlotError,
@@ -429,14 +430,67 @@ def test_auto_naming_and_collision():
     assert d2.name == "dummy_node_1"
 
 
-def test_fit_transform_two_passes():
+def test_fit_transform_fits_then_transforms():
     dag = MLDag()
     scaler = _Scaler()
     s = dag >> as_node(scaler, name="scaler")
     s["result"] >> dag["out"]
     run = dag.fit_transform([1.0, 3.0])
     assert run.outputs == {"out": [-1.0, 1.0]}
-    assert scaler.calls == ["fit", "transform"]  # fit pass elides leaf transform
+    assert scaler.calls == ["fit", "transform"]
+
+
+def _one_pass_dag(mixins=()):
+    """Non-leaf FunctionNode → EstimatorNode → nested MLDagNode on the
+    train input, plus an ``as_transform`` alias of the estimator on the
+    test input."""
+    inner = MLDag()
+    inc = inner >> as_node(lambda xs: [x + 100 for x in xs], name="inc")
+    inc["result"] >> inner["res"]
+
+    dag = MLDag(mixins=list(mixins))
+    pre = dag["train"] >> as_node(lambda xs: [2 * x for x in xs], name="pre")
+    scaler = pre >> EstimatorNode(_Scaler(), name="scaler")
+    sub = scaler >> MLDagNode(inner, name="sub")
+    alias = dag["test"] >> as_transform("scaler", name="scaler_test")
+    sub["res"] >> dag["train_out"]
+    alias["result"] >> dag["test_out"]
+    return dag
+
+
+def test_fit_transform_is_one_pass():
+    """Each top-level node is transformed exactly once, inside one
+    mixin run carrying the caller's run_id, and the outputs equal a
+    separate ``fit`` followed by ``transform``."""
+    events = []
+
+    class Count(MLDagMixin):
+        def _transform(self, call_next, node, *a, **k):
+            events.append(("transform", node.name))
+            return call_next(*a, **k)
+
+        def _start_run(self, run_id):
+            events.append(("start", run_id))
+
+        def _end_run(self, run_id):
+            events.append(("end", run_id))
+
+    dag = _one_pass_dag([Count()])
+    run = dag.fit_transform(train=[1.0, 3.0], test=[5.0], run_id="rid")
+    assert events[0] == ("start", "rid") and events[-1] == ("end", "rid")
+    assert sorted(events[1:-1]) == [
+        ("transform", name) for name in ("pre", "scaler", "scaler_test", "sub")
+    ]
+    assert dag.node_dict["scaler"].estimator.calls == [
+        "fit", "transform", "transform",  # scaler, then its alias
+    ]
+
+    two_pass = _one_pass_dag()
+    two_pass.fit(train=[1.0, 3.0], test=[5.0])
+    expected = two_pass.transform(train=[1.0, 3.0], test=[5.0]).outputs
+    assert run.outputs == expected == {
+        "train_out": [98.0, 102.0], "test_out": [1.0],
+    }
 
 
 def test_estimator_node_pyspark_style_contract():
@@ -623,14 +677,15 @@ def test_quality_classifier_deterministic(spark, sf_dir):
 
 
 def test_fit_apply_transform_pass_reuses_fit_materialization(spark, sf_dir):
-    """r16 (guide §1.2): fit_transform runs two passes; the featurize
-    frame is a memoized lazy localCheckpoint so the transform pass
-    reads the rows the eager scaler.fit already materialized instead
-    of re-running the clean → dedup-window front half. Pins: the
-    stats leaf's plan reads the checkpoint (no parquet re-scan), and
-    the memo never serves one sf_dir's rows for another."""
+    """fit_transform is one pass: the featurize frame is a lazy
+    localCheckpoint, so the caller's action on the stats leaf reads the
+    rows the eager scaler.fit already materialized instead of re-running
+    the clean → dedup-window front half. Pins: the stats leaf's plan
+    reads the checkpoint (no parquet re-scan), and one dag instance run
+    over another input directory serves that directory's rows."""
     import io
     import contextlib
+    from pathlib import Path
 
     from mldag_spark.queries.dag_pipeline import build_fit_apply_dag
 
@@ -644,19 +699,46 @@ def test_fit_apply_transform_pass_reuses_fit_materialization(spark, sf_dir):
     assert "ExistingRDD" in plan
     assert "Scan parquet" not in plan and "FileScan" not in plan
 
-    # same dag instance, different input dir: cache miss, not stale rows
-    other = sf_dir.replace("sf0.001", "sf0.01")
-    run2 = dag.fit_transform(other)
+    # same dag instance, the sibling scale factor's directory
+    here = Path(sf_dir)
+    other = here.with_name("sf0.01" if here.name == "sf0.001" else "sf0.001")
+    if not other.is_dir():
+        pytest.skip(f"no sibling scale factor {other.name} next to {sf_dir}")
+    run2 = dag.fit_transform(str(other))
     a = {tuple(r) for r in stats.collect()}
     b = {tuple(r) for r in run2.outputs["fit_apply_stats"].collect()}
     assert a != b
 
 
+def test_fit_apply_rerun_reads_rewritten_input(spark, sf_dir, tmp_path):
+    """One build_fit_apply_dag instance run again over the same
+    directory after its documents were rewritten in place returns what
+    a fresh dag returns over the new rows, not the first run's rows."""
+    import pyarrow.parquet as pq
+
+    from mldag_spark.queries.dag_pipeline import build_fit_apply_dag
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    path = tmp_path / "documents.parquet"
+    pq.write_table(docs, path)
+
+    def stats(dag):
+        out = dag.fit_transform(str(tmp_path)).outputs["fit_apply_stats"]
+        return {tuple(r) for r in out.collect()}
+
+    dag = build_fit_apply_dag(spark)
+    first = stats(dag)
+    pq.write_table(docs.slice(0, docs.num_rows // 2), path)
+    second = stats(dag)
+    assert second == stats(build_fit_apply_dag(spark))
+    assert second != first
+
+
 def test_quality_classifier_scores_from_fit_materialization(spark, sf_dir):
-    """r16 twin of the fit_apply pin: the classifier's featurize frame
-    (tokenize ×3 over the corpus) is memoized + lazily checkpointed,
-    so the rollup leaf scores from the materialized features instead
-    of re-tokenizing."""
+    """Twin of the fit_apply pin: the classifier's featurize frame
+    (tokenize ×3 over the corpus) is a lazy localCheckpoint, so the
+    rollup leaf scores from the rows the eager LBFGS fit materialized
+    instead of re-tokenizing."""
     import io
     import contextlib
 

@@ -55,6 +55,16 @@ def duck():
     con.close()
 
 
+def test_normalize_equates_negative_zero():
+    """-0.0 and 0.0 are equal cells, so equal multisets that differ
+    only in the zero's sign must normalize to the same sorted rows."""
+    import pandas as pd
+
+    a = pd.DataFrame({"x": [-0.0, -1e-05]})
+    b = pd.DataFrame({"x": [0.0, -1e-05]})
+    assert normalize(a) == normalize(b)
+
+
 @pytest.mark.parametrize("name", UNGATED_WITH_ORACLE)
 def test_ungated_query_matches_oracle(name, spark, duck):
     sdf = _QUERIES[name](spark, SF_DIR).toPandas()
