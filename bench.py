@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -259,8 +260,59 @@ def bench_shard_write(spark, sf_dir: str, repeats: int) -> dict:
 CANARY = HEADLINE
 
 
-def _load_prev_registry(workdir: str):
-    """Materialize CANARY_REF via git-archive and import its
+# Every round closes with a "round N: verdict/..." commit, which holds
+# that round's final code. The same round's end-of-round snapshot is
+# also titled "round N: ..." but is no close: the r16 canary matched it
+# and timed HEAD against itself.
+ROUND_CLOSE = re.compile(r"round [0-9]+: verdict")
+
+
+def resolve_canary_ref(repo: str) -> tuple[str | None, str | None]:
+    """The commit the canary A/B runs against, as ``(ref, None)``, or
+    ``(None, reason)`` when the canary is skipped. CANARY_REF's first
+    token names the ref; "auto" (or no CANARY_REF) means the most
+    recent round-close commit. A ref whose ``mldag_spark/`` tree equals
+    HEAD's is refused: the A/B would time the same code twice."""
+    import subprocess
+
+    def git(*args: str) -> str | None:
+        r = subprocess.run(
+            ["git", *args], cwd=repo, capture_output=True, text=True
+        )
+        return r.stdout.strip() if r.returncode == 0 else None
+
+    ref = ""
+    try:
+        with open(os.path.join(repo, "CANARY_REF")) as f:
+            ref = f.readline().split()[0]
+    except (OSError, IndexError):
+        pass
+    if not ref or ref == "auto":
+        log = git("log", "--format=%h %s")
+        if log is None:
+            return None, "git log failed: not a git checkout"
+        ref = next(
+            (
+                h
+                for h, _, subject in (
+                    line.partition(" ") for line in log.splitlines()
+                )
+                if ROUND_CLOSE.match(subject)
+            ),
+            "",
+        )
+        if not ref:
+            return None, "no round-close commit (round N: verdict...)"
+    tree = git("rev-parse", "--verify", "-q", f"{ref}:mldag_spark")
+    if tree is None:
+        return None, f"ref {ref!r} has no mldag_spark/ tree"
+    if tree == git("rev-parse", "--verify", "-q", "HEAD:mldag_spark"):
+        return None, f"ref {ref!r} has the same mldag_spark/ tree as HEAD"
+    return ref, None
+
+
+def _load_prev_registry(workdir: str, ref: str):
+    """Materialize ``ref`` via git-archive and import its
     mldag_spark package, restoring the current package in sys.modules
     afterwards. The returned callables keep the prev module objects
     alive through their __globals__, so both versions coexist."""
@@ -268,21 +320,6 @@ def _load_prev_registry(workdir: str):
     import subprocess
     import tarfile
 
-    repo = os.path.dirname(os.path.abspath(__file__))
-    ref = ""
-    try:
-        ref = open(os.path.join(repo, "CANARY_REF")).readline().split()[0]
-    except (OSError, IndexError):
-        pass
-    if not ref or ref == "auto":
-        # auto-detect: the driver closes every round with a
-        # "round N: verdict/..." commit, so the most recent one IS the
-        # previous round's final code — no manual ref refresh needed
-        ref = subprocess.run(
-            ["git", "log", "--grep", "^round [0-9]*:", "-1",
-             "--format=%h"],
-            cwd=repo, capture_output=True, text=True, check=True,
-        ).stdout.strip()
     tar_path = os.path.join(workdir, "prev.tar")
     with open(tar_path, "wb") as f:
         subprocess.run(
@@ -313,7 +350,7 @@ def _load_prev_registry(workdir: str):
             del sys.modules[k]
         sys.modules.update(saved)
         importlib.invalidate_caches()
-    return ref, registry
+    return registry
 
 
 def bench_canary(spark, sf_dir: str, qs_current, repeats: int = 2) -> dict:
@@ -322,9 +359,14 @@ def bench_canary(spark, sf_dir: str, qs_current, repeats: int = 2) -> dict:
     import shutil
     import tempfile
 
+    ref, skipped = resolve_canary_ref(
+        os.path.dirname(os.path.abspath(__file__))
+    )
+    if ref is None:
+        return {"ref": None, "skipped": skipped, "ratio_vs_prev": None}
     workdir = tempfile.mkdtemp(prefix="bench_canary_")
     try:
-        ref, prev = _load_prev_registry(workdir)
+        prev = _load_prev_registry(workdir, ref)
         missing = [n for n in CANARY if n not in prev or n not in qs_current]
         names = [n for n in CANARY if n not in missing]
 
@@ -856,7 +898,12 @@ def main() -> int:
                 # ratio — compare THIS across rounds, not raw totals
                 "canary_ratio_vs_prev": canary.get("ratio_vs_prev"),
                 "canary_ref": canary.get("ref"),
+                "canary_skipped": canary.get("skipped"),
                 "detail_file": detail_path,
+                # the reading's own context: the local[N] core count
+                # and the codegen-probe anchor the gates scale to
+                "cpus": _ncpu,
+                "probe_anchor_sec": probe_anchor,
             }
         )
     )

@@ -722,7 +722,11 @@ def agg_approx_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("l_partkey", 0.01).alias("_pa"),
         F.approx_count_distinct("l_suppkey", 0.01).alias("_sa"),
     )
-    agg = exact.join(sketch, "l_returnflag")
+    # null-safe join back: GROUP BY keeps a NULL l_returnflag group,
+    # which a plain equi-join would drop (ADVICE r16)
+    agg = exact.join(
+        sketch, exact["l_returnflag"].eqNullSafe(sketch["l_returnflag"])
+    ).drop(sketch["l_returnflag"])
     within = (
         (
             F.abs(F.col("_pa") - F.col("n_parts_exact"))

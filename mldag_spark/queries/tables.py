@@ -52,12 +52,24 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
             # directory-style dataset (the normal Spark write layout,
             # ADVICE r15): an in-place part-file rewrite does not touch
             # the directory's own mtime/size, so key on the part files'
-            # aggregate (newest mtime, total size, count) instead
-            parts = [
-                os.stat(os.path.join(path, f))
-                for f in os.listdir(path)
-                if not f.startswith((".", "_"))
-            ]
+            # aggregate (newest mtime, total size, count) instead. The
+            # walk descends into Hive partition dirs (``k=v/``), whose
+            # part files a rewrite changes just as invisibly; it skips
+            # what Spark's file index skips (hidden and ``_``-prefixed
+            # names, except ``_``-prefixed partition dirs like
+            # ``_mb_id=0``).
+            parts = []
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [
+                    d for d in dirs
+                    if not d.startswith(".")
+                    and (not d.startswith("_") or "=" in d)
+                ]
+                parts += [
+                    os.stat(os.path.join(root, f))
+                    for f in files
+                    if not f.startswith((".", "_"))
+                ]
             key = (
                 os.path.abspath(path),
                 max((p.st_mtime for p in parts), default=st.st_mtime),

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampNTZType,
+    _parse_datatype_string,
 )
 
 
@@ -325,6 +326,29 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _local_frame(
+    spark: SparkSession, rows: list[tuple], schema_ddl: str
+) -> DataFrame:
+    """``rows`` as a DataFrame whose schema is exactly ``schema_ddl``
+    (nullability included), built on the driver as a ``pyarrow.Table``.
+
+    Spark plans an Arrow-built frame as a ``LocalTableScan``, so
+    writing it runs JVM-only tasks. ``createDataFrame`` over a Python
+    list instead parallelizes a Python RDD: every write of it starts a
+    job whose tasks each launch a Python worker (~0.2 s apiece). On a
+    4-cpu host a one-row ledger commit measured ~0.35 s that way and
+    ~0.10 s from this frame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = _parse_datatype_string(schema_ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def _seed_idempotent_sink(
     spark: SparkSession, out_path: str, checkpoint: str, schema_ddl: str
 ) -> None:
@@ -345,6 +369,10 @@ def _seed_idempotent_sink(
       overwrite would leave the old numbering's stale partitions
       alive, silently duplicating rows. Refuse instead.
 
+    The seed is a driver-local frame (:func:`_local_frame`): it holds
+    no rows, so there is nothing to distribute, and writing it runs no
+    Python worker.
+
     Existence checks go through the Hadoop FileSystem API (out_path
     may be s3a://... on a cluster)."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(out_path)
@@ -357,7 +385,7 @@ def _seed_idempotent_sink(
         s.getPath().getName() != "_mb_id=-1" for s in statuses
     )
     if not statuses:
-        empty = spark.createDataFrame([], schema_ddl)
+        empty = _local_frame(spark, [], schema_ddl)
         empty.write.mode("overwrite").parquet(f"{out_path}/_mb_id=-1")
     elif has_batches:
         ckpt = spark._jvm.org.apache.hadoop.fs.Path(checkpoint)
@@ -662,7 +690,12 @@ def pack_stream_batch(
     replay before the next id runs, so the predecessor row is always
     committed when batch N starts; a missing predecessor falls back
     to the max-committed-row scan rather than silently packing from
-    zero."""
+    zero.
+
+    The ledger row is one driver-held value, so it is written from a
+    driver-local frame (:func:`_local_frame`): the commit is a
+    JVM-only ``LocalTableScan`` write, not a Python-worker job per
+    micro-batch."""
     from mldag_spark.operators.packing import token_budget_batches
 
     spark = batch.sparkSession
@@ -719,8 +752,8 @@ def pack_stream_batch(
         .agg(F.coalesce(F.sum(count_col), F.lit(0)).alias("t"))
         .collect()[0]["t"]
     )
-    spark.createDataFrame(
-        [(int(carry_in) + int(total),)], "cum_total bigint"
+    _local_frame(
+        spark, [(int(carry_in) + int(total),)], "cum_total bigint"
     ).write.mode("overwrite").parquet(f"{carry_path}/_mb_id={bid}")
 
 
@@ -780,12 +813,15 @@ def mg_sketch_stream_batch(
     """One micro-batch of :func:`mg_sketch_stream` — module-level so
     the retry contract is replayable (the ``pack_stream_batch``
     convention): reads only COMMITTED state strictly before ``bid``,
-    writes only its own ledger row."""
+    writes only its own ledger row.
+
+    The empty prior summary and the <= k merged rows already sit on
+    the driver, so both are driver-local frames
+    (:func:`_local_frame`): the summary commit is a JVM-only
+    ``LocalTableScan`` write, with no Python worker per micro-batch."""
     spark = batch.sparkSession
     if bid <= 0:
-        prev = spark.createDataFrame(
-            [], f"{elem_col} string, cnt bigint"
-        )
+        prev = _local_frame(spark, [], f"{elem_col} string, cnt bigint")
     else:
         path = f"{sketch_path}/_mb_id={bid - 1}"
         jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
@@ -807,8 +843,8 @@ def mg_sketch_stream_batch(
                 committed.filter(F.col("_mb_id") == m)
                 .select(elem_col, "cnt")
                 if m is not None
-                else spark.createDataFrame(
-                    [], f"{elem_col} string, cnt bigint"
+                else _local_frame(
+                    spark, [], f"{elem_col} string, cnt bigint"
                 )
             )
 
@@ -841,6 +877,6 @@ def mg_sketch_stream_batch(
         ]
     else:
         out = [(r[elem_col], int(r["cnt"])) for r in topk1]
-    spark.createDataFrame(
-        out, f"{elem_col} string, cnt bigint"
+    _local_frame(
+        spark, out, f"{elem_col} string, cnt bigint"
     ).write.mode("overwrite").parquet(f"{sketch_path}/_mb_id={bid}")

@@ -223,3 +223,74 @@ def test_schema_cache_invalidates_on_in_place_part_rewrite(spark, tmp_path):
     os.utime(d, (dir_stat.st_atime, dir_stat.st_mtime))
 
     assert _read_parquet(spark, d).schema.fieldNames() == ["b", "c"]
+
+
+def test_schema_cache_invalidates_on_nested_partition_part_rewrite(
+    spark, tmp_path
+):
+    """ADVICE r16: the directory cache key must cover part files inside
+    Hive partition dirs (``k=v/part-*.parquet``). Rewriting one in place,
+    with every directory's own mtime restored, must still make the next
+    ``load`` infer the new schema."""
+    import os
+    import shutil
+
+    sf = tmp_path / "sf"
+    d = str(sf / "region.parquet")
+    spark.range(5).selectExpr("id AS a", "0 AS k").coalesce(1).write.partitionBy(
+        "k"
+    ).parquet(d)
+    assert load(spark, str(sf), "region").schema.fieldNames() == ["a", "k"]
+
+    nested = os.path.join(d, "k=0")
+    dir_stats = {p: os.stat(p) for p in (d, nested)}
+    part = [f for f in os.listdir(nested) if f.endswith(".parquet")][0]
+    tmp2 = str(tmp_path / "ds2")
+    spark.range(7).selectExpr("id AS b", "id AS c").coalesce(1).write.parquet(
+        tmp2
+    )
+    part2 = [f for f in os.listdir(tmp2) if f.endswith(".parquet")][0]
+    shutil.copyfile(os.path.join(tmp2, part2), os.path.join(nested, part))
+    for f in os.listdir(nested):  # a real writer replaces checksums too
+        if f.endswith(".crc"):
+            os.remove(os.path.join(nested, f))
+    for p, st in dir_stats.items():
+        os.utime(p, (st.st_atime, st.st_mtime))
+
+    assert load(spark, str(sf), "region").schema.fieldNames() == [
+        "b", "c", "k"
+    ]
+
+
+def test_approx_distinct_counts_keep_a_null_key_group(spark, tmp_path):
+    """ADVICE r16: ``agg_approx_distinct_counts`` joins its exact and
+    sketch aggregates back on ``l_returnflag``. GROUP BY keeps a NULL
+    key group, so the join must too: over a lineitem copy holding a
+    NULL ``l_returnflag`` row, the NULL group is present and every group
+    matches the exact distinct counts."""
+    import pyarrow as pa
+
+    from mldag_spark.queries import REGISTRY
+
+    li = pq.read_table(f"{SF_DIR}/lineitem.parquet")
+    null_row = li.slice(0, 1).set_column(
+        li.schema.get_field_index("l_returnflag"),
+        li.schema.field("l_returnflag"),
+        pa.nulls(1, li.schema.field("l_returnflag").type),
+    )
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.concat_tables([li, null_row]), sf / "lineitem.parquet")
+
+    got = {
+        r["l_returnflag"]: (
+            r["n_parts_exact"], r["n_supps_exact"], r["approx_within_5pct"]
+        )
+        for r in REGISTRY["agg_approx_distinct_counts"](spark, str(sf)).collect()
+    }
+    want = {
+        r["l_returnflag"]: (r["n_parts"], r["n_supps"], True)
+        for r in REGISTRY["agg_exact_distinct_counts"](spark, str(sf)).collect()
+    }
+    assert None in want
+    assert got == want

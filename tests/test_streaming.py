@@ -513,3 +513,104 @@ def test_mg_sketch_stream_state_and_replay(spark, tmp_path):
         .collect()
     )
     assert ledger_after == ledger_before
+
+
+def test_local_frame_is_a_local_table_scan_of_the_ddl_schema(spark, tmp_path):
+    """Engine contract of the streaming bookkeeping writes: the frame a
+    seed, ledger row or sketch summary is written from is a driver-local
+    relation (``LocalTableScan``, no Python RDD behind it) whose schema
+    is exactly the DDL, and its rows read back unchanged."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    cases = [
+        ([], "w string, cnt bigint"),
+        ([(41,)], "cum_total bigint"),
+        ([("a", 3), (None, 2), ("b", 1)], "w string, cnt bigint"),
+    ]
+    for i, (rows, ddl) in enumerate(cases):
+        df = S._local_frame(spark, rows, ddl)
+        assert df.schema == _parse_datatype_string(ddl)
+        executed = df._jdf.queryExecution().executedPlan()
+        assert executed.nodeName() == "LocalTableScan", executed.toString()
+        assert [tuple(r) for r in df.collect()] == rows
+        out = str(tmp_path / f"w{i}")
+        df.write.parquet(out)
+        back = spark.read.parquet(out)
+        assert back.schema == _parse_datatype_string(ddl)
+        assert sorted(map(tuple, back.collect()), key=repr) == sorted(
+            rows, key=repr
+        )
+
+
+def test_stream_bookkeeping_never_builds_a_python_rdd(
+    spark, tmp_path, monkeypatch
+):
+    """Two-micro-batch ``pack_stream`` and ``mg_sketch_stream`` runs
+    write every seed, carry-ledger row and sketch summary without
+    ``createDataFrame`` over a Python list (``_createFromLocal``), which
+    would launch a Python worker per task on every commit. The inputs
+    are built before the method is patched to raise."""
+    import os
+
+    from pyspark.sql import SparkSession
+
+    pack_rows = [(i, 900 + 31 * i) for i in range(1, 9)]
+    pack_src = str(tmp_path / "pack_src")
+    S.stage_id_ordered_micro_batches(
+        spark.createDataFrame(pack_rows, "doc_id bigint, n_tokens bigint"),
+        pack_src, 2, "doc_id",
+    )
+    mg_rows = [(i, "h" if i % 3 else f"t{i}") for i in range(40)]
+    mg_src = str(tmp_path / "mg_src")
+    S.stage_id_ordered_micro_batches(
+        spark.createDataFrame(mg_rows, "doc_id bigint, w string"),
+        mg_src, 2, "doc_id",
+    )
+    for src in (pack_src, mg_src):
+        parts = [f for f in os.listdir(src) if f.endswith(".parquet")]
+        assert len(parts) == 2, "fixture must yield two micro-batches"
+
+    calls = []
+
+    def _no_python_rdd(self, *args, **kwargs):
+        calls.append(args)
+        raise AssertionError("createDataFrame over a Python list")
+
+    monkeypatch.setattr(SparkSession, "_createFromLocal", _no_python_rdd)
+
+    carry = str(tmp_path / "carry")
+    S.pack_stream(
+        spark.readStream.schema("doc_id bigint, n_tokens bigint")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(pack_src),
+        "doc_id",
+        "n_tokens",
+        max_tokens=2048,
+        out_path=str(tmp_path / "packed"),
+        checkpoint=str(tmp_path / "pack_ckpt"),
+        carry_path=carry,
+    )
+    sketch = str(tmp_path / "sketch")
+    S.mg_sketch_stream(
+        spark.readStream.schema("doc_id bigint, w string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(mg_src),
+        "w",
+        3,
+        sketch_path=sketch,
+        checkpoint=str(tmp_path / "mg_ckpt"),
+    )
+    assert calls == []
+
+    ledger = sorted(
+        (r["_mb_id"], r["cum_total"])
+        for r in spark.read.parquet(carry).filter(F.col("_mb_id") >= 0)
+        .collect()
+    )
+    assert [m for m, _ in ledger] == [0, 1]
+    assert ledger[-1][1] == sum(n for _i, n in pack_rows)
+    summary = spark.read.parquet(sketch).filter(F.col("_mb_id") >= 0)
+    assert summary.schema.simpleString() == (
+        "struct<w:string,cnt:bigint,_mb_id:int>"
+    )
+    assert {r["_mb_id"] for r in summary.collect()} == {0, 1}
